@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hadoop_ir_spark.operators import rank, scoring, stats
+from hadoop_ir_spark.session import parallel_frames  # noqa: F401  (queries/* import it from here)
 
 # ---------------------------------------------------------------------------
 # fixed demo topics over the synthetic `documents` vocabulary
@@ -51,23 +52,6 @@ def register(name: str, oracle: str | None = None):
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-
-
-def parallel_frames(*thunks):
-    """Materialize INDEPENDENT eager frames concurrently (guide §2.6):
-    each thunk builds + materializes one frame (typically a
-    ``localCheckpoint``); submitting them from a small thread pool lets
-    the tail of one job back-fill executors freed by the other instead
-    of running the two materializations strictly serially. Results come
-    back in thunk order. Used by queries whose build phase needs two
-    independent pipelines (a run + qrels, or two runs) before the final
-    plan — measured ~25-30% off the build phase of the eval family at
-    sf0.1, and strictly better executor utilization at scale."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(len(thunks)) as ex:
-        futs = [ex.submit(t) for t in thunks]
-        return [f.result() for f in futs]
 
 
 def _topics_df(spark: SparkSession) -> DataFrame:

@@ -70,13 +70,3 @@ def minhash_sigs(token_hash: Column, num_hashes: int) -> list[Column]:
         h = ((prod + F.lit(b).cast("decimal(38,0)")) % F.lit(MERSENNE_P).cast("decimal(38,0)"))
         out.append(h.cast("long"))
     return out
-
-
-def minhash_sig_sql(token_hash_expr: str, num_hashes: int) -> list[str]:
-    """DuckDB SQL expressions matching :func:`minhash_sigs` (HUGEINT math)."""
-    exprs = []
-    for a, b in minhash_params(num_hashes):
-        exprs.append(
-            f"CAST((CAST({token_hash_expr} AS HUGEINT) * {a} + {b}) % {MERSENNE_P} AS BIGINT)"
-        )
-    return exprs

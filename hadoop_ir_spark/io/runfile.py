@@ -43,16 +43,3 @@ def read_run(spark: SparkSession, path: str) -> DataFrame:
             F.regexp_replace(parts[4], ",", "").cast("double").alias("score"),
         )
     )
-
-
-def write_triples(scored: DataFrame, path: str,
-                  single_file: bool = False) -> None:
-    """The reference's raw emit: ``qid \\t docno \\t score``
-    (TrecRun.java:183-189), gzip like the anchor sink when asked (S10)."""
-    out = scored.select(
-        F.concat_ws("\t", F.col("qid"), F.col("docno"),
-                    F.col("score").cast("string")).alias("value")
-    )
-    if single_file:
-        out = out.coalesce(1)
-    out.write.mode("overwrite").text(path)

@@ -51,21 +51,6 @@ def word_seqs(tokens: DataFrame, term_col: str = "term") -> DataFrame:
     return counted.select(term_col, "cnt", seq.alias("seq"))
 
 
-def _pair_counts(seqs: DataFrame) -> DataFrame:
-    l = F.split("seq", SEP)
-    pairs = F.expr(
-        f"transform(sequence(1, size(_l) - 1),"
-        f" i -> concat(element_at(_l, i), '{PAIR_SEP}',"
-        f"             element_at(_l, i + 1)))"
-    )
-    return (
-        seqs.select("cnt", l.alias("_l"))
-        .filter(F.size("_l") >= 2)
-        .select("cnt", F.explode(pairs).alias("pair"))
-        .groupBy("pair").agg(F.sum("cnt").alias("pair_cnt"))
-    )
-
-
 def _sql_quote(s: str) -> str:
     return "'" + s.replace("'", "''") + "'"
 

@@ -418,15 +418,6 @@ def cosine_expr(a: Column, b: Column) -> Column:
     return dot / (na * nb)
 
 
-def normalized_vec(vec: Column) -> Column:
-    """vec / ||vec|| in double — cosine then reduces to a plain dot."""
-    norm = F.sqrt(F.aggregate(
-        F.transform(vec, lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0), lambda acc, v: acc + v,
-    ))
-    return F.transform(vec, lambda x: x.cast("double") / norm)
-
-
 def dot_expr(a: Column, b: Column, dim: int | None = None) -> Column:
     """Dot product of two array columns. With ``dim`` known statically the
     sum unrolls into plain codegen'd arithmetic (~10× faster than the

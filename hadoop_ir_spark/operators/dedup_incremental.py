@@ -82,7 +82,11 @@ Writers stage into uniquely-named ``snap=<id>.tmp-<token>`` attempt
 dirs and commit under a manifest lock with a compare-and-swap on
 ``next_snap`` (r10): concurrent folds cannot destroy each other's
 in-flight dirs or silently drop a snapshot — the loser raises
-``ConcurrentWriteError`` and cleans up its staged dirs.
+``ConcurrentWriteError`` and cleans up its staged dirs. Every writer
+stages ALL tables of its snapshot concurrently (one Spark job chain per
+table, submitted together) and takes the lock only after the last one
+has finished; a failed table write waits for its siblings to settle,
+then removes every staged dir.
 
 Retractions are **tombstones**: ``tombstones/snap=<id>`` holds the
 docnos removed at snapshot ``id``; readers drop any per-doc row whose
@@ -101,8 +105,10 @@ per table — the standing tables are never read, shuffled, or
 rewritten. ``compact_dedup_index`` is the periodic maintenance pass
 that merges the log back to one snapshot per table (applying
 tombstones and summing count deltas); between compactions readers pay
-one union over the visible snap dirs and one broadcast tombstone
-anti-filter — both delta-shaped.
+one parquet scan per table over its visible snap dirs (they are
+Hive-style ``snap`` partitions of the table dir, so the snap id comes
+from the partition column) and one broadcast tombstone anti-filter —
+both delta-shaped.
 
 **Precedence semantics** (what makes incremental ≡ from-scratch): every
 indexed (old) doc precedes every new doc; new docs order by docno. A
@@ -143,6 +149,7 @@ import shutil
 import time
 import uuid
 from contextlib import contextmanager
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -157,6 +164,7 @@ from hadoop_ir_spark.operators.winnow import (
     _merge_islands,
     winnow_fingerprints,
 )
+from hadoop_ir_spark.session import parallel_frames
 
 INDEX_TABLES = ("content_hashes", "shingles", "band_keys", "seed_grams",
                 "simhash", "winnow_fps", "winnow_df")
@@ -397,11 +405,17 @@ def _manifest_lock(index_dir: str, timeout_s: float = 60.0,
 
 
 class _SnapAttempt:
-    """A staged write cycle at snap id ``sid``: tables land in
-    ``table/snap=<sid>.tmp-<token>`` dirs no other writer can name, then
-    ``commit`` renames them into visibility and swaps the manifest
-    atomically under the lock — after verifying ``next_snap`` is still
-    ``sid`` (the CAS). On CAS failure the attempt aborts and raises."""
+    """A staged write cycle at snap id ``sid``. ``write_all`` stages
+    every table of the snapshot CONCURRENTLY (``parallel_frames``) into
+    ``table/snap=<sid>.tmp-<token>`` dirs no other writer can name, and
+    returns only once every write has finished; ``commit`` then renames
+    them into visibility and swaps the manifest atomically under the
+    lock — after verifying ``next_snap`` is still ``sid`` (the CAS), so
+    no write is ever in flight while the lock is held. If any write
+    fails, ``write_all`` waits for the in-flight ones to settle, removes
+    every staged dir and re-raises the first error; on CAS failure the
+    attempt aborts and raises. ``write`` stages one table synchronously
+    (its tmp dir exists when it returns)."""
 
     def __init__(self, index_dir: str, sid: int):
         self.index_dir = index_dir
@@ -414,21 +428,31 @@ class _SnapAttempt:
                             f"snap={self.sid}.tmp-{self.token}")
 
     def write(self, df: DataFrame, table: str) -> None:
-        (df.repartitionByRange(*_RANGE_KEYS[table])
-         .sortWithinPartitions(*_SORT_KEYS[table])
-         .write.mode("overwrite").parquet(self._tmp(table)))
+        # registered first, so abort also removes a partially written dir
         self.tables.append(table)
+        _write_snap_table(df, self.index_dir, table,
+                          f"{self.sid}.tmp-{self.token}")
+
+    def write_all(self, frames: dict[str, DataFrame | None]) -> None:
+        try:
+            parallel_frames(*(partial(self.write, df, t)
+                              for t, df in frames.items() if df is not None))
+        except BaseException:
+            self.abort()
+            raise
 
     def abort(self) -> None:
         for t in self.tables:
             shutil.rmtree(self._tmp(t), ignore_errors=True)
 
-    def commit(self, mutate_manifest) -> dict:
+    def commit(self, mutate_manifest, cas: bool = True) -> dict:
         """``mutate_manifest(man) -> man`` builds the post-commit
-        manifest from the state re-read under the lock."""
+        manifest from the state re-read under the lock. ``cas=False``
+        is a build's commit: it replaces whatever store the dir held, so
+        there is nothing to compare against (``man`` is None)."""
         with _manifest_lock(self.index_dir):
-            man = _read_manifest(self.index_dir)
-            if man["next_snap"] != self.sid:
+            man = _read_manifest(self.index_dir) if cas else None
+            if cas and man["next_snap"] != self.sid:
                 self.abort()
                 raise ConcurrentWriteError(
                     f"dedup index at {self.index_dir}: a concurrent "
@@ -470,21 +494,28 @@ def _visible_snaps(index_dir: str, snaps) -> list[int]:
 
 def _union_snaps(spark: SparkSession, index_dir: str, table: str,
                  snaps: list[int]) -> DataFrame | None:
-    """Union of a table's visible snap dirs with the snap id attached.
-    Missing dirs are skipped (an update that only removed docs writes
-    no row-table dir for its snap id). allowMissingColumns tolerates
-    dirs written before an additive schema change (r12 added the
-    ``src`` provenance column to ann_assign/ann_codes — a pre-r12 dir's
-    rows surface it as null, which every consumer treats as 'train')."""
-    out = None
-    for sid in snaps:
-        p = os.path.join(index_dir, table, f"snap={sid}")
-        if not os.path.isdir(p):
-            continue
-        df = spark.read.parquet(p).withColumn("_snap", F.lit(sid))
-        out = df if out is None else out.unionByName(
-            df, allowMissingColumns=True)
-    return out
+    """A table's visible snap dirs in ONE scan, with the snap id attached
+    as ``_snap``. The ``snap=<id>`` dirs are Hive-style partitions of the
+    table dir, so a single reader with ``basePath`` over the visible dirs
+    yields the snap id as a partition column — one listing, one schema
+    inference and one file scan per table, however many snapshots are
+    visible (``.tmp-`` attempt dirs and unreferenced snaps are never
+    named, so never read). Missing dirs are skipped (an update that only
+    removed docs writes no row-table dir for its snap id). mergeSchema
+    tolerates dirs written before an additive schema change (r12 added
+    the ``src`` provenance column to ann_assign/ann_codes — a pre-r12
+    dir's rows surface it as null, which every consumer treats as
+    'train'). It adds missing columns but does not widen types: every
+    writer of a table must write each column with one type (docno as
+    the callers' id type, consistently across build and folds)."""
+    tdir = os.path.join(index_dir, table)
+    paths = [p for p in (os.path.join(tdir, f"snap={sid}") for sid in snaps)
+             if os.path.isdir(p)]
+    if not paths:
+        return None
+    return (spark.read.option("basePath", tdir)
+            .option("mergeSchema", "true").parquet(*paths)
+            .withColumn("_snap", F.col("snap").cast("int")).drop("snap"))
 
 
 def _live_rows(spark: SparkSession, index_dir: str, table: str,
@@ -559,11 +590,6 @@ def _delta_log(spark: SparkSession, index_dir: str, table: str,
     if df is None:
         return spark.createDataFrame([], DELTA_TABLES[table][2])
     return df.drop("_snap")
-
-
-def seed_gram_deltas(spark: SparkSession, index_dir: str,
-                     snaps=None) -> DataFrame:
-    return _delta_log(spark, index_dir, "seed_grams", snaps)
 
 
 def load_dedup_index(spark: SparkSession, index_dir: str,
@@ -641,9 +667,12 @@ def _clear_snap_dirs(index_dir: str, sid: int) -> None:
 
 
 def _write_snap_table(df: DataFrame, index_dir: str, table: str,
-                      sid: int) -> None:
-    """One snap dir, overwrite mode: a crashed fold's partial leftovers
-    at the same (not-yet-visible) snap id are clobbered on replay."""
+                      sid: int | str) -> None:
+    """The store's one write primitive: ``df`` range-partitioned and
+    sorted per the table's write discipline into ``table/snap=<sid>``
+    (``sid`` may name a staging attempt, ``<id>.tmp-<token>``).
+    Overwrite mode: a crashed fold's partial leftovers at the same
+    (not-yet-visible) dir are clobbered on replay."""
     (df.repartitionByRange(*_RANGE_KEYS[table])
      .sortWithinPartitions(*_SORT_KEYS[table])
      .write.mode("overwrite")
@@ -732,14 +761,14 @@ def build_dedup_index(docs: DataFrame, out_dir: str, *, k: int = 3,
     if embeddings is not None:
         frames[EMBEDDINGS_TABLE] = _norm_emb(embeddings, emb_id_col,
                                              emb_vec_col)
-    for t, df in frames.items():
-        _write_snap_table(df, out_dir, t, 0)
-    _write_manifest(out_dir, {
+    att = _SnapAttempt(out_dir, 0)
+    att.write_all(frames)
+    att.commit(lambda _: {
         "snaps": [0], "next_snap": 1, "last_snap": 0,
         "last_batch_id": None, "last_batch_snap": None,
         "params": _params(k, num_hashes, bands, min_len, portable,
                           win_k, win_w),
-    })
+    }, cas=False)
 
 
 def update_dedup_index(spark: SparkSession, index_dir: str,
@@ -801,95 +830,82 @@ def update_dedup_index(spark: SparkSession, index_dir: str,
     _check_params(man, _params(k, num_hashes, bands, min_len, portable,
                                win_k, win_w))
     sid = man["next_snap"]
+    out: dict[str, DataFrame] = {}
+    deltas: dict[str, list[DataFrame]] = {t: [] for t in DELTA_TABLES}
+    if new_docs is not None:
+        d = _norm(new_docs, id_col, text_col)
+        frames = _fingerprint_frames(d, k=k, num_hashes=num_hashes,
+                                     bands=bands, min_len=min_len,
+                                     portable=portable, win_k=win_k,
+                                     win_w=win_w)
+        for t in DELTA_TABLES:
+            deltas[t].append(frames.pop(t))
+        out.update(frames)
+    if new_embeddings is not None:
+        ne = _norm_emb(new_embeddings, emb_id_col, emb_vec_col)
+        out[EMBEDDINGS_TABLE] = ne
+        if man.get("ann"):
+            # O(snapshot) ANN fold-in: assign ONLY the new vectors to
+            # the persisted centroids — the standing assignment is
+            # never read or rewritten. src='fold' marks the rows as
+            # post-training for ann_health's fold_fraction.
+            out[ANN_ASSIGN] = _assign_to_centroids(
+                ne, _ann_centroid_frame(spark, index_dir, man),
+                src="fold")
+        if man.get("pq"):
+            # O(snapshot) PQ fold-in: encode ONLY the new vectors
+            # against the persisted codebook — the standing codes are
+            # never read or rewritten. A residual store encodes
+            # x − c(x) against THIS batch's assignment to the persisted
+            # centroids (same broadcast artifacts).
+            enc_in = ne
+            if man["pq"].get("residual"):
+                cents = _ann_centroid_frame(spark, index_dir, man)
+                enc_in = _residual_frame(
+                    ne, _assign_to_centroids(ne, cents), cents)
+            out[ANN_CODES] = _pq_encode_docs(
+                enc_in, _pq_codebook_frame(spark, index_dir, man),
+                man["pq"]["m"], man["pq"]["dims"], src="fold")
+        if man.get("sq"):
+            # O(snapshot) SQ8 fold-in: encode ONLY the new vectors
+            # against the persisted bounds — out-of-range values clip;
+            # ann_health's sq fold_fraction tracks the drift.
+            lo, hi, _ = _sq_bound_arrays(
+                _sq_bounds_frame(spark, index_dir, man))
+            out[SQ_CODES] = _sq_encode_docs(ne, lo, hi, src="fold")
+    if removed_docs is not None:
+        r = _norm(removed_docs, id_col, text_col)
+        out[TOMBSTONES] = r.select("docno").distinct()
+        deltas["seed_grams"].append(
+            seed_gram_stream(r, min_len=min_len)
+            .groupBy("gh")
+            .agg((-F.count(F.lit(1))).cast("long").alias("n")))
+        deltas["winnow_df"].append(
+            winnow_fingerprints(r, k=win_k, w=win_w)
+            .groupBy("fp")
+            .agg((-F.count(F.lit(1))).cast("long").alias("df")))
+    for t, parts in deltas.items():
+        if not parts:
+            continue
+        key, val, _ = DELTA_TABLES[t]
+        df = parts[0]
+        if len(parts) == 2:
+            df = (parts[0].unionByName(parts[1])
+                  .groupBy(key).agg(F.sum(val).cast("long").alias(val)))
+        out[t] = df.filter(F.col(val) != 0)
+    if new_docs is not None and man.get("cc"):
+        # incremental duplicate-cluster maintenance: merge the
+        # snapshot's pair edges into the standing labels (new label
+        # rows + alias rows for merged components — O(snapshot)); docs
+        # retracted in THIS batch are excluded from the old side (their
+        # tombstone postdates the standing rows)
+        removed_ids = (r.select("docno").distinct()
+                       if removed_docs is not None else None)
+        out[CC_LABELS], out[CC_ALIAS] = _cc_fold_frames(
+            spark, index_dir, man, d, frames, man["cc"]["tau"],
+            removed_ids)
     att = _SnapAttempt(index_dir, sid)
-    try:
-        deltas: dict[str, list[DataFrame]] = {t: [] for t in DELTA_TABLES}
-        if new_docs is not None:
-            d = _norm(new_docs, id_col, text_col)
-            frames = _fingerprint_frames(d, k=k, num_hashes=num_hashes,
-                                         bands=bands, min_len=min_len,
-                                         portable=portable, win_k=win_k,
-                                         win_w=win_w)
-            for t in DELTA_TABLES:
-                deltas[t].append(frames.pop(t))
-            for t, df in frames.items():
-                att.write(df, t)
-        wrote_ann = wrote_pq = wrote_sq = False
-        if new_embeddings is not None:
-            ne = _norm_emb(new_embeddings, emb_id_col, emb_vec_col)
-            att.write(ne, EMBEDDINGS_TABLE)
-            if man.get("ann"):
-                # O(snapshot) ANN fold-in: assign ONLY the new vectors
-                # to the persisted centroids — the standing assignment
-                # is never read or rewritten. src='fold' marks the rows
-                # as post-training for ann_health's fold_fraction.
-                att.write(_assign_to_centroids(
-                    ne, _ann_centroid_frame(spark, index_dir, man),
-                    src="fold"), ANN_ASSIGN)
-                wrote_ann = True
-            if man.get("pq"):
-                # O(snapshot) PQ fold-in: encode ONLY the new vectors
-                # against the persisted codebook — the standing codes
-                # are never read or rewritten. A residual store encodes
-                # x − c(x) against THIS batch's assignment to the
-                # persisted centroids (same broadcast artifacts).
-                enc_in = ne
-                if man["pq"].get("residual"):
-                    cents = _ann_centroid_frame(spark, index_dir, man)
-                    enc_in = _residual_frame(
-                        ne, _assign_to_centroids(ne, cents), cents)
-                att.write(_pq_encode_docs(
-                    enc_in, _pq_codebook_frame(spark, index_dir, man),
-                    man["pq"]["m"], man["pq"]["dims"], src="fold"),
-                    ANN_CODES)
-                wrote_pq = True
-            if man.get("sq"):
-                # O(snapshot) SQ8 fold-in: encode ONLY the new vectors
-                # against the persisted bounds — out-of-range values
-                # clip; ann_health's sq fold_fraction tracks the drift.
-                lo, hi, _ = _sq_bound_arrays(
-                    _sq_bounds_frame(spark, index_dir, man))
-                att.write(_sq_encode_docs(ne, lo, hi, src="fold"),
-                          SQ_CODES)
-                wrote_sq = True
-        if removed_docs is not None:
-            r = _norm(removed_docs, id_col, text_col)
-            att.write(r.select("docno").distinct(), TOMBSTONES)
-            deltas["seed_grams"].append(
-                seed_gram_stream(r, min_len=min_len)
-                .groupBy("gh")
-                .agg((-F.count(F.lit(1))).cast("long").alias("n")))
-            deltas["winnow_df"].append(
-                winnow_fingerprints(r, k=win_k, w=win_w)
-                .groupBy("fp")
-                .agg((-F.count(F.lit(1))).cast("long").alias("df")))
-        for t, parts in deltas.items():
-            if not parts:
-                continue
-            key, val, _ = DELTA_TABLES[t]
-            df = parts[0]
-            if len(parts) == 2:
-                df = (parts[0].unionByName(parts[1])
-                      .groupBy(key).agg(F.sum(val).cast("long").alias(val)))
-            att.write(df.filter(F.col(val) != 0), t)
-        wrote_cc = False
-        if new_docs is not None and man.get("cc"):
-            # incremental duplicate-cluster maintenance: merge the
-            # snapshot's pair edges into the standing labels (new label
-            # rows + alias rows for merged components — O(snapshot));
-            # docs retracted in THIS batch are excluded from the old
-            # side (their tombstone postdates the standing rows)
-            removed_ids = (r.select("docno").distinct()
-                           if removed_docs is not None else None)
-            new_rows, aliases = _cc_fold_frames(
-                spark, index_dir, man, d, frames, man["cc"]["tau"],
-                removed_ids)
-            att.write(new_rows, CC_LABELS)
-            att.write(aliases, CC_ALIAS)
-            wrote_cc = True
-    except Exception:
-        att.abort()
-        raise
+    att.write_all(out)
 
     def _mut(m: dict) -> dict:
         m = dict(m)
@@ -902,19 +918,19 @@ def update_dedup_index(spark: SparkSession, index_dir: str,
             # the newest one — a manual (non-batch) update landing in
             # the crash window would otherwise poison the pre-fold view
             m["last_batch_snap"] = sid
-        if wrote_ann:
+        if ANN_ASSIGN in out:
             ann = dict(m["ann"])
             ann["assign_snaps"] = ann["assign_snaps"] + [sid]
             m["ann"] = ann
-        if wrote_pq:
+        if ANN_CODES in out:
             pq = dict(m["pq"])
             pq["code_snaps"] = pq["code_snaps"] + [sid]
             m["pq"] = pq
-        if wrote_sq:
+        if SQ_CODES in out:
             sq = dict(m["sq"])
             sq["code_snaps"] = sq["code_snaps"] + [sid]
             m["sq"] = sq
-        if wrote_cc:
+        if CC_LABELS in out:
             cc = dict(m["cc"])
             cc["label_snaps"] = cc["label_snaps"] + [sid]
             m["cc"] = cc
@@ -983,148 +999,141 @@ def compact_dedup_index(spark: SparkSession, index_dir: str, *,
     if len(merge) <= 1 and not merge_tomb:
         return        # already compact: nothing to merge, nothing to fold
     sid = man["next_snap"]
-    att = _SnapAttempt(index_dir, sid)
     # the merged view: row tables restricted to the merge prefix but
     # with ALL visible tombstones applied (passing the full snap list to
     # the tombstone side); seed-gram deltas summed over the prefix only
-    try:
-        out = {}
-        for t in INDEX_TABLES:
-            if t in DELTA_TABLES:
-                key, val, _ = DELTA_TABLES[t]
-                out[t] = (_delta_log(spark, index_dir, t, merge)
-                          .groupBy(key).agg(F.sum(val).alias(val))
-                          .filter(F.col(val) > 0))
-            else:
-                out[t] = _live_rows_tomb(spark, index_dir, t, merge,
-                                         old_snaps)
-        emb = _live_rows_tomb(spark, index_dir, EMBEDDINGS_TABLE, merge,
-                              old_snaps)
-        if emb is not None:
-            out[EMBEDDINGS_TABLE] = emb
-        new_ann = man.get("ann")
-        if new_ann:
-            # the ANN tables ride the same merge: assign rows in the
-            # merged prefix fold (tombstones applied) into the new snap;
-            # the centroid artifact is copied verbatim if its snap merges
-            assign_merge = [s for s in new_ann["assign_snaps"]
-                            if s in merge]
-            new_assign = [s for s in new_ann["assign_snaps"] if s in kept]
-            if assign_merge:
-                out[ANN_ASSIGN] = _live_rows_tomb(
-                    spark, index_dir, ANN_ASSIGN, assign_merge, old_snaps)
-                new_assign = [sid] + new_assign
-            csnap = new_ann["centroid_snap"]
-            if csnap in merge:
-                out[ANN_CENTROIDS] = spark.read.parquet(
-                    os.path.join(index_dir, ANN_CENTROIDS,
-                                 f"snap={csnap}"))
-                csnap = sid
-            new_ann = {**new_ann, "centroid_snap": csnap,
-                       "assign_snaps": new_assign}
-        new_pq = man.get("pq")
-        if new_pq:
-            # the PQ tables ride the same merge: code rows in the merged
-            # prefix fold (tombstones applied) into the new snap; the
-            # codebook artifact is copied verbatim if its snap merges
-            codes_merge = [s for s in new_pq["code_snaps"] if s in merge]
-            new_codes = [s for s in new_pq["code_snaps"] if s in kept]
-            if codes_merge:
-                out[ANN_CODES] = _live_rows_tomb(
-                    spark, index_dir, ANN_CODES, codes_merge, old_snaps)
-                new_codes = [sid] + new_codes
-            qsnap = new_pq["codebook_snap"]
-            if qsnap in merge:
-                out[ANN_CODEBOOK] = spark.read.parquet(
-                    os.path.join(index_dir, ANN_CODEBOOK,
-                                 f"snap={qsnap}"))
-                qsnap = sid
-            new_pq = {**new_pq, "codebook_snap": qsnap,
-                      "code_snaps": new_codes}
-        new_sq = man.get("sq")
-        if new_sq:
-            # the SQ tables ride the same merge: code rows in the merged
-            # prefix fold (tombstones applied) into the new snap; the
-            # bounds artifact is copied verbatim if its snap merges
-            sq_merge = [s for s in new_sq["code_snaps"] if s in merge]
-            new_sq_codes = [s for s in new_sq["code_snaps"] if s in kept]
-            if sq_merge:
-                out[SQ_CODES] = _live_rows_tomb(
-                    spark, index_dir, SQ_CODES, sq_merge, old_snaps)
-                new_sq_codes = [sid] + new_sq_codes
-            bsnap = new_sq["bounds_snap"]
-            if bsnap in merge:
-                out[SQ_BOUNDS] = spark.read.parquet(
-                    os.path.join(index_dir, SQ_BOUNDS,
-                                 f"snap={bsnap}"))
-                bsnap = sid
-            new_sq = {**new_sq, "bounds_snap": bsnap,
-                      "code_snaps": new_sq_codes}
-        new_cc = man.get("cc")
-        if new_cc:
-            # merged-prefix label rows get the PREFIX aliases folded in
-            # (kept rows were written after every prefix alias, so those
-            # aliases can only target prefix rows); kept snaps keep
-            # their alias dirs, which the reader still applies
-            l_merge = [s for s in new_cc["label_snaps"] if s in merge]
-            new_lsnaps = [s for s in new_cc["label_snaps"] if s in kept]
-            prefix_amap = _cc_alias_map(spark, index_dir, l_merge)
-            rows = _live_rows_tomb(spark, index_dir, CC_LABELS,
-                                   l_merge, old_snaps) if l_merge else None
-            if rows is not None:
-                out[CC_LABELS] = _cc_apply_aliases(rows, prefix_amap)
-                new_lsnaps = [sid] + new_lsnaps
-            # persist the retraction evidence the fold-time re-add
-            # guards need (ADVICE r10): this compaction may fold merged
-            # tombstone dirs out of visibility, but a dead doc's id can
-            # keep NAMING the post-compaction store — as a raw label on
-            # surviving partner rows (the dead-min deferral) or as a
-            # kept-snap alias key (the alias-side twin). Record every
-            # such name with no live doc row in the cc block; the
-            # guards union it with whatever tombstones remain visible.
-            # Bounded by retracted cluster minima standing since the
-            # last rebuild — build_cc_labels(rebuild=True) clears it.
-            all_l = [s for s in man["cc"]["label_snaps"]
-                     if s in old_snaps]
-            allrows = _live_rows_tomb(spark, index_dir, CC_LABELS,
-                                      all_l, old_snaps)
-            kept_amap = _cc_alias_map(
-                spark, index_dir,
-                [s for s in man["cc"]["label_snaps"] if s in kept])
-            names = None
-            if allrows is not None:
-                # kept rows never carry a prefix-alias key (rows are
-                # written amap-resolved), so applying the prefix map to
-                # the full union yields exactly the post-compaction raw
-                # label column
-                names = (_cc_apply_aliases(allrows, prefix_amap)
-                         .select(F.col("label").alias("docno"))
-                         .distinct())
-            if kept_amap:
-                kdf = spark.createDataFrame(
-                    [(int(k),) for k in sorted(kept_amap)], "docno long")
-                names = kdf if names is None else (names.unionByName(kdf)
-                                                   .distinct())
-            dead_names: list[int] = []
-            if names is not None:
-                live_ch = _live_rows_tomb(spark, index_dir,
-                                          "content_hashes", old_snaps,
-                                          old_snaps)
-                if live_ch is not None:
-                    names = names.join(
-                        live_ch.select("docno").distinct(), "docno",
-                        "anti")
-                dead_names = sorted(
-                    r["docno"] for r in names.collect())
-            new_cc = {**new_cc, "label_snaps": new_lsnaps,
-                      "dead_names": dead_names}
-        for t, df in out.items():
-            if df is None:
-                continue
-            att.write(df, t)
-    except Exception:
-        att.abort()
-        raise
+    out = {}
+    for t in INDEX_TABLES:
+        if t in DELTA_TABLES:
+            key, val, _ = DELTA_TABLES[t]
+            out[t] = (_delta_log(spark, index_dir, t, merge)
+                      .groupBy(key).agg(F.sum(val).alias(val))
+                      .filter(F.col(val) > 0))
+        else:
+            out[t] = _live_rows_tomb(spark, index_dir, t, merge,
+                                     old_snaps)
+    emb = _live_rows_tomb(spark, index_dir, EMBEDDINGS_TABLE, merge,
+                          old_snaps)
+    if emb is not None:
+        out[EMBEDDINGS_TABLE] = emb
+    new_ann = man.get("ann")
+    if new_ann:
+        # the ANN tables ride the same merge: assign rows in the
+        # merged prefix fold (tombstones applied) into the new snap;
+        # the centroid artifact is copied verbatim if its snap merges
+        assign_merge = [s for s in new_ann["assign_snaps"]
+                        if s in merge]
+        new_assign = [s for s in new_ann["assign_snaps"] if s in kept]
+        if assign_merge:
+            out[ANN_ASSIGN] = _live_rows_tomb(
+                spark, index_dir, ANN_ASSIGN, assign_merge, old_snaps)
+            new_assign = [sid] + new_assign
+        csnap = new_ann["centroid_snap"]
+        if csnap in merge:
+            out[ANN_CENTROIDS] = spark.read.parquet(
+                os.path.join(index_dir, ANN_CENTROIDS,
+                             f"snap={csnap}"))
+            csnap = sid
+        new_ann = {**new_ann, "centroid_snap": csnap,
+                   "assign_snaps": new_assign}
+    new_pq = man.get("pq")
+    if new_pq:
+        # the PQ tables ride the same merge: code rows in the merged
+        # prefix fold (tombstones applied) into the new snap; the
+        # codebook artifact is copied verbatim if its snap merges
+        codes_merge = [s for s in new_pq["code_snaps"] if s in merge]
+        new_codes = [s for s in new_pq["code_snaps"] if s in kept]
+        if codes_merge:
+            out[ANN_CODES] = _live_rows_tomb(
+                spark, index_dir, ANN_CODES, codes_merge, old_snaps)
+            new_codes = [sid] + new_codes
+        qsnap = new_pq["codebook_snap"]
+        if qsnap in merge:
+            out[ANN_CODEBOOK] = spark.read.parquet(
+                os.path.join(index_dir, ANN_CODEBOOK,
+                             f"snap={qsnap}"))
+            qsnap = sid
+        new_pq = {**new_pq, "codebook_snap": qsnap,
+                  "code_snaps": new_codes}
+    new_sq = man.get("sq")
+    if new_sq:
+        # the SQ tables ride the same merge: code rows in the merged
+        # prefix fold (tombstones applied) into the new snap; the
+        # bounds artifact is copied verbatim if its snap merges
+        sq_merge = [s for s in new_sq["code_snaps"] if s in merge]
+        new_sq_codes = [s for s in new_sq["code_snaps"] if s in kept]
+        if sq_merge:
+            out[SQ_CODES] = _live_rows_tomb(
+                spark, index_dir, SQ_CODES, sq_merge, old_snaps)
+            new_sq_codes = [sid] + new_sq_codes
+        bsnap = new_sq["bounds_snap"]
+        if bsnap in merge:
+            out[SQ_BOUNDS] = spark.read.parquet(
+                os.path.join(index_dir, SQ_BOUNDS,
+                             f"snap={bsnap}"))
+            bsnap = sid
+        new_sq = {**new_sq, "bounds_snap": bsnap,
+                  "code_snaps": new_sq_codes}
+    new_cc = man.get("cc")
+    if new_cc:
+        # merged-prefix label rows get the PREFIX aliases folded in
+        # (kept rows were written after every prefix alias, so those
+        # aliases can only target prefix rows); kept snaps keep
+        # their alias dirs, which the reader still applies
+        l_merge = [s for s in new_cc["label_snaps"] if s in merge]
+        new_lsnaps = [s for s in new_cc["label_snaps"] if s in kept]
+        prefix_amap = _cc_alias_map(spark, index_dir, l_merge)
+        rows = _live_rows_tomb(spark, index_dir, CC_LABELS,
+                               l_merge, old_snaps) if l_merge else None
+        if rows is not None:
+            out[CC_LABELS] = _cc_apply_aliases(rows, prefix_amap)
+            new_lsnaps = [sid] + new_lsnaps
+        # persist the retraction evidence the fold-time re-add
+        # guards need (ADVICE r10): this compaction may fold merged
+        # tombstone dirs out of visibility, but a dead doc's id can
+        # keep NAMING the post-compaction store — as a raw label on
+        # surviving partner rows (the dead-min deferral) or as a
+        # kept-snap alias key (the alias-side twin). Record every
+        # such name with no live doc row in the cc block; the
+        # guards union it with whatever tombstones remain visible.
+        # Bounded by retracted cluster minima standing since the
+        # last rebuild — build_cc_labels(rebuild=True) clears it.
+        all_l = [s for s in man["cc"]["label_snaps"]
+                 if s in old_snaps]
+        allrows = _live_rows_tomb(spark, index_dir, CC_LABELS,
+                                  all_l, old_snaps)
+        kept_amap = _cc_alias_map(
+            spark, index_dir,
+            [s for s in man["cc"]["label_snaps"] if s in kept])
+        names = None
+        if allrows is not None:
+            # kept rows never carry a prefix-alias key (rows are
+            # written amap-resolved), so applying the prefix map to
+            # the full union yields exactly the post-compaction raw
+            # label column
+            names = (_cc_apply_aliases(allrows, prefix_amap)
+                     .select(F.col("label").alias("docno"))
+                     .distinct())
+        if kept_amap:
+            kdf = spark.createDataFrame(
+                [(int(k),) for k in sorted(kept_amap)], "docno long")
+            names = kdf if names is None else (names.unionByName(kdf)
+                                               .distinct())
+        dead_names: list[int] = []
+        if names is not None:
+            live_ch = _live_rows_tomb(spark, index_dir,
+                                      "content_hashes", old_snaps,
+                                      old_snaps)
+            if live_ch is not None:
+                names = names.join(
+                    live_ch.select("docno").distinct(), "docno",
+                    "anti")
+            dead_names = sorted(
+                r["docno"] for r in names.collect())
+        new_cc = {**new_cc, "label_snaps": new_lsnaps,
+                  "dead_names": dead_names}
+    att = _SnapAttempt(index_dir, sid)
+    att.write_all(out)
     lbs = man.get("last_batch_snap")
 
     def _mut(m: dict) -> dict:
@@ -1673,12 +1682,8 @@ def train_ann_index(spark: SparkSession, index_dir: str, *,
     centroids = centroids.localCheckpoint()   # two consumers below
     sid = man["next_snap"]
     att = _SnapAttempt(index_dir, sid)
-    try:
-        att.write(centroids, ANN_CENTROIDS)
-        att.write(_assign_to_centroids(emb, centroids), ANN_ASSIGN)
-    except Exception:
-        att.abort()
-        raise
+    att.write_all({ANN_CENTROIDS: centroids,
+                   ANN_ASSIGN: _assign_to_centroids(emb, centroids)})
 
     def _mut(m: dict) -> dict:
         m = dict(m)
@@ -1911,12 +1916,8 @@ def train_pq_index(spark: SparkSession, index_dir: str, *,
     codebook = codebook.localCheckpoint()   # two consumers below
     sid = man["next_snap"]
     att = _SnapAttempt(index_dir, sid)
-    try:
-        att.write(codebook, ANN_CODEBOOK)
-        att.write(_pq_encode_docs(emb, codebook, m, dims), ANN_CODES)
-    except Exception:
-        att.abort()
-        raise
+    att.write_all({ANN_CODEBOOK: codebook,
+                   ANN_CODES: _pq_encode_docs(emb, codebook, m, dims)})
 
     def _mut(mn: dict) -> dict:
         mn = dict(mn)
@@ -2326,12 +2327,8 @@ def train_sq_index(spark: SparkSession, index_dir: str, *,
     lo, hi, dims = _sq_bound_arrays(bounds)
     sid = man["next_snap"]
     att = _SnapAttempt(index_dir, sid)
-    try:
-        att.write(bounds, SQ_BOUNDS)
-        att.write(_sq_encode_docs(emb, lo, hi), SQ_CODES)
-    except Exception:
-        att.abort()
-        raise
+    att.write_all({SQ_BOUNDS: bounds,
+                   SQ_CODES: _sq_encode_docs(emb, lo, hi)})
 
     def _mut(mn: dict) -> dict:
         mn = dict(mn)
@@ -2589,13 +2586,8 @@ def build_cc_labels(spark: SparkSession, index_dir: str, *,
         ex.unionByName(near).distinct(), "a", "b", algorithm="star")
     sid = man["next_snap"]
     att = _SnapAttempt(index_dir, sid)
-    try:
-        att.write(comp.select(F.col("node").alias("docno"),
-                              F.col("cluster_id").alias("label")),
-                  CC_LABELS)
-    except Exception:
-        att.abort()
-        raise
+    att.write_all({CC_LABELS: comp.select(
+        F.col("node").alias("docno"), F.col("cluster_id").alias("label"))})
 
     def _mut(m: dict) -> dict:
         m = dict(m)

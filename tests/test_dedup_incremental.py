@@ -2869,3 +2869,111 @@ def test_ivfsq_equals_sq_restricted_to_probed(spark, tmp_path):
         got = sorted(map(tuple, narrow.filter(
             F.col("qid") == qid).collect()))
         assert got == want, qid
+
+
+# ---------------------------------------------------------------------------
+# concurrent snapshot writes and the one-scan snapshot read
+# ---------------------------------------------------------------------------
+
+def _tmp_dirs(idx):
+    import os
+
+    return [os.path.join(t, e) for t in os.listdir(idx)
+            if os.path.isdir(os.path.join(idx, t))
+            for e in os.listdir(os.path.join(idx, t)) if ".tmp-" in e]
+
+
+def test_failed_table_write_aborts_the_whole_snapshot(spark, tmp_path,
+                                                      snapshots,
+                                                      monkeypatch):
+    """A fold whose write of ONE table fails must settle every other
+    in-flight write before it aborts: no staged dir survives (not even
+    one a slower sibling write finishes after the failure), the manifest
+    is byte-identical, and the store still folds cleanly afterwards."""
+    import os
+    import time
+
+    old, new = snapshots
+    idx = str(tmp_path / "idx")
+    dinc.build_dedup_index(_df(spark, old), idx)
+    man_path = os.path.join(idx, dinc.MANIFEST)
+    with open(man_path, "rb") as f:
+        man_before = f.read()
+    orig_write = dinc._SnapAttempt.write
+    slow_done = []
+
+    def failing(self, df, table):
+        if table == "band_keys":
+            raise OSError("disk full while staging band_keys")
+        if table == "content_hashes":
+            time.sleep(1.0)            # still running when band_keys fails
+            orig_write(self, df, table)
+            slow_done.append(table)
+            return
+        orig_write(self, df, table)
+
+    monkeypatch.setattr(dinc._SnapAttempt, "write", failing)
+    with pytest.raises(OSError, match="disk full"):
+        dinc.update_dedup_index(spark, idx, _df(spark, new),
+                                removed_docs=_df(spark, [old[0]]))
+    assert slow_done == ["content_hashes"]    # waited for, not orphaned
+    assert not _tmp_dirs(idx)
+    time.sleep(1.5)
+    assert not _tmp_dirs(idx), "a write landed after the abort"
+    with open(man_path, "rb") as f:
+        assert f.read() == man_before
+    monkeypatch.setattr(dinc._SnapAttempt, "write", orig_write)
+    dinc.update_dedup_index(spark, idx, _df(spark, new),
+                            removed_docs=_df(spark, [old[0]]))
+    scratch = str(tmp_path / "scratch")
+    dinc.build_dedup_index(_df(spark, old[1:] + new), scratch)
+    a, b = _index_content(spark, idx), _index_content(spark, scratch)
+    for t in b:
+        assert a[t] == b[t], t
+
+
+def test_union_snaps_is_one_scan(spark, tmp_path, monkeypatch):
+    """Every visible snap dir of a table is read by ONE parquet scan; a
+    missing dir and an attempt's ``.tmp-`` dir are never read, and
+    ``_snap`` is the snap id each row was written at."""
+    import shutil
+
+    import pyspark.sql.readwriter as rw
+
+    idx = str(tmp_path / "idx")
+    dinc.build_dedup_index(_docs_for(spark, [1, 2]), idx)
+    dinc.update_dedup_index(spark, idx, _docs_for(spark, [3]))
+    dinc.update_dedup_index(spark, idx, _docs_for(spark, [4, 5]))
+    tdir = tmp_path / "idx" / "content_hashes"
+    shutil.copytree(tdir / "snap=0", tdir / "snap=3.tmp-0123456789ab")
+    calls = []
+    orig = rw.DataFrameReader.parquet
+
+    def spying(self, *paths, **kw):
+        calls.append(paths)
+        return orig(self, *paths, **kw)
+
+    monkeypatch.setattr(rw.DataFrameReader, "parquet", spying)
+    df = dinc._union_snaps(spark, idx, "content_hashes", [0, 1, 2, 7])
+    got = sorted((r["docno"], r["_snap"]) for r in df.collect())
+    assert len(calls) == 1, calls
+    assert got == [(1, 0), (2, 0), (3, 1), (4, 2), (5, 2)]
+    assert dinc._union_snaps(spark, idx, "content_hashes", [7]) is None
+
+
+def test_union_snaps_fills_columns_missing_from_older_dirs(spark, tmp_path):
+    """An ``ann_assign`` dir written before the ``src`` provenance column
+    existed unions with a newer one; its rows surface ``src`` as null."""
+    idx = str(tmp_path / "idx")
+    dinc._write_snap_table(
+        spark.createDataFrame([(1, 0), (2, 1)], "docno long, centroid_id int"),
+        idx, dinc.ANN_ASSIGN, 0)
+    dinc._write_snap_table(
+        spark.createDataFrame([(3, 1, "fold")],
+                              "docno long, centroid_id int, src string"),
+        idx, dinc.ANN_ASSIGN, 1)
+    df = dinc._union_snaps(spark, idx, dinc.ANN_ASSIGN, [0, 1])
+    assert sorted(map(tuple, df.select("docno", "centroid_id", "src",
+                                       "_snap").collect()),
+                  key=lambda t: t[0]) == [
+        (1, 0, None, 0), (2, 1, None, 0), (3, 1, "fold", 1)]
